@@ -549,6 +549,65 @@ def star_contraction(
     return edges, rounds
 
 
+# Distinct (hi, lo) rows up to which connected_components labels the graph
+# on the driver instead of contracting it: the largest size
+# tools_cc_crossover.py measures, where the driver finish was still 20x
+# faster (SCALE.md §22). 1M rows of two longs are ~16 MB of Arrow; that
+# finish ran inside a 2 GB driver heap.
+_LOCAL_FINISH_EDGES = 1_000_000
+
+
+def _union_find_labels(edges: DataFrame) -> DataFrame:
+    """Driver finish of :func:`connected_components`: the (hi, lo) rows
+    come back through Arrow, a min-rooted union-find labels every node,
+    and the labels return as a local DataFrame with the schema the
+    contraction path produces.
+
+    Ids are ranked by ``np.unique`` (sorted, so the smallest rank in a set
+    is its smallest id — code-point order for strings, which is Spark's
+    UTF-8 byte order) and the union-find runs on ranks: a union hangs the
+    larger root under the smaller, so every root is its component's min.
+    """
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    table = edges.toArrow()
+    hi = table.column("hi").to_numpy(zero_copy_only=False)
+    lo = table.column("lo").to_numpy(zero_copy_only=False)
+    ids, ranks = np.unique(np.concatenate([hi, lo]), return_inverse=True)
+
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    n = len(hi)
+    for a, b in zip(ranks[:n].tolist(), ranks[n:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+
+    id_type = table.schema.field("hi").type
+    hi_f, lo_f = edges.schema["hi"], edges.schema["lo"]
+    # as on the contraction path, where doc_id is the union of hi and lo
+    # and cluster_id = coalesce(root, doc_id)
+    nullable = hi_f.nullable or lo_f.nullable
+    schema = StructType([
+        StructField("doc_id", hi_f.dataType, nullable),
+        StructField("cluster_id", hi_f.dataType, nullable),
+    ])
+    labels = pa.table({
+        "doc_id": pa.array(ids, id_type),
+        "cluster_id": pa.array(ids[roots], id_type),
+    })
+    return edges.sparkSession.createDataFrame(labels, schema)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -558,33 +617,45 @@ def connected_components(
     """(doc_id, cluster_id) for every document in a near-dup pair; cluster_id
     is the minimum doc id reachable through the pair graph.
 
-    Implemented as alternating large-star/small-star contraction (Kiveris
-    et al. 2014) — O(log^2 n) rounds independent of component diameter, so
-    skewed/chain-shaped components cost the same as the clique-shaped ones
-    near-dup graphs usually produce (the r5 min-label implementation was
-    O(diameter); see star_contraction). Each round shuffles the current
-    edge set keyed by node id; no step materializes a neighborhood larger
-    than the node's degree, and the edge set only shrinks toward one edge
-    per non-root node — 100 TB-safe.
+    The pairs are evaluated ONCE: their distinct (greatest, least) rows —
+    a self-pair ``(x, x)`` stays as the row of node ``x`` — are
+    materialised through :func:`truncate_lineage` and one aggregate action
+    counts them. Up to ``_LOCAL_FINISH_EDGES`` rows the graph is finished
+    on the driver (:func:`_union_find_labels`): near-dup graphs are mostly
+    small, and there a contraction costs three Spark jobs per round for a
+    few dozen edges.
 
-    This is the step that turns pairwise similarity output into dedup
-    groups (keep min-id per cluster, drop the rest).
+    Larger graphs run alternating large-star/small-star contraction
+    (Kiveris et al. 2014) from the same materialised set — O(log^2 n)
+    rounds independent of component diameter, so skewed/chain-shaped
+    components cost the same as the clique-shaped ones near-dup graphs
+    usually produce (see star_contraction). Each round shuffles the
+    current edge set keyed by node id; no step materializes a
+    neighborhood larger than the node's degree, and the edge set only
+    shrinks toward one edge per non-root node — 100 TB-safe.
+
+    Both paths return the same schema and rows; a null id names no
+    document and labels nothing. This is the step that turns pairwise
+    similarity output into dedup groups (keep min-id per cluster, drop
+    the rest).
     """
-    canonical = (
+    edges = truncate_lineage(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("hi"),
             F.least(F.col(id_a), F.col(id_b)).alias("lo"),
         )
-        .filter(F.col("hi") != F.col("lo"))
+        .filter(F.col("lo").isNotNull())  # least() is null only if both are
         .distinct()
     )
-    nodes = (
-        pairs.select(F.col(id_a).alias("node"))
-        .union(pairs.select(F.col(id_b).alias("node")))
-        .distinct()
-    )
-    nodes = pin(nodes, StorageLevel.MEMORY_AND_DISK)
+    if edges.count() <= _LOCAL_FINISH_EDGES:
+        return _union_find_labels(edges)
 
+    canonical = edges.filter(F.col("hi") != F.col("lo"))
+    nodes = (
+        edges.select(F.col("hi").alias("node"))
+        .union(edges.select(F.col("lo").alias("node")))
+        .distinct()
+    )
     stars, _ = star_contraction(canonical, max_iter=max_iter)
     labels = nodes.join(
         stars.select(F.col("hi").alias("node"), F.col("lo").alias("root")),
@@ -594,9 +665,7 @@ def connected_components(
         F.col("node").alias("doc_id"),
         F.coalesce("root", "node").alias("cluster_id"),
     )
-    result = truncate_lineage(labels)
-    nodes.unpersist()
-    return result
+    return truncate_lineage(labels)
 
 
 def dedup_survivors(

@@ -323,9 +323,10 @@ def q_dedup_minhash_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT s AS doc_id, LEAST(MIN(d), s) AS cluster_id
     FROM reach GROUP BY s
     """,
-    doc="Duplicate clustering: connected components (iterative min-label "
-    "propagation) over MinHash near-dup pairs; oracle is a recursive-CTE "
-    "transitive closure.",
+    doc="Duplicate clustering: connected components over MinHash near-dup "
+    "pairs (driver union-find for small pair sets, large-star/small-star "
+    "contraction above that); oracle is a recursive-CTE transitive "
+    "closure.",
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -2092,7 +2092,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="End-to-end entity resolution over part names: block on the first "
     "token, link names within edit distance 2, close the link graph into "
-    "entities (iterative min-label connected components), and emit one "
+    "entities (connected components, operators/dedup.py), and emit one "
     "canonical record per entity (min member key). Linking runs on the "
     "DISTINCT NAME domain — bounded vocabulary, SF-independent — and "
     "parts map in by broadcast-scale joins, the same value-domain rule "

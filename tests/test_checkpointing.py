@@ -58,8 +58,9 @@ def test_dispatch_falls_back_to_local_without_dir():
 
 
 def test_connected_components_under_reliable_checkpoints(spark, tmp_path):
-    """End-to-end: with a checkpoint dir configured, the star-contraction
-    rounds write real checkpoint RDDs to it and the labels stay exact."""
+    """End-to-end: with a checkpoint dir configured, the materialised pair
+    set (and, when contracted, every contraction round) writes real
+    checkpoint RDDs to it and the labels stay exact."""
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None, "suite must start without a dir"
     ckpt = str(tmp_path / "ckpt")
@@ -90,6 +91,17 @@ def test_connected_components_under_reliable_checkpoints(spark, tmp_path):
         # so later tests keep the local fallback
         sc._jsc.setCheckpointDir(None)
         assert sc.getCheckpointDir() is None
+
+
+def test_connected_components_under_reliable_checkpoints_contracted(
+    spark, tmp_path, monkeypatch
+):
+    """The same pins when the graph is contracted instead of finished on
+    the driver."""
+    from etl_data_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+    test_connected_components_under_reliable_checkpoints(spark, tmp_path)
 
 
 def test_pagerank_under_reliable_checkpoints(spark, tmp_path):

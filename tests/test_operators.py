@@ -1296,12 +1296,10 @@ def test_connected_components_and_survivors(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 5, 10]
 
 
-def test_star_contraction_skewed_components(spark):
-    """Large-star/small-star must label a long chain + cliques correctly in
-    O(log^2 n) rounds — the case where min-label propagation needs O(n)."""
+def _skewed_graph(spark):
+    """(pairs, union-find truth): one 4096-node chain, two cliques and a
+    random blob."""
     import random
-
-    from etl_data_spark.operators import dedup as D
 
     n_chain = 4096
     edges = [(i, i + 1) for i in range(n_chain - 1)]  # one 4096-node chain
@@ -1329,6 +1327,13 @@ def test_star_contraction_skewed_components(spark):
     truth = {x: find(x) for x in parent}
 
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(8)
+    return pairs, truth
+
+
+def test_star_contraction_skewed_components(spark):
+    """Large-star/small-star must label a long chain + cliques correctly in
+    O(log^2 n) rounds — the case where min-label propagation needs O(n)."""
+    pairs, truth = _skewed_graph(spark)
     canonical = (
         pairs.selectExpr("greatest(id_a, id_b) AS hi", "least(id_a, id_b) AS lo")
         .filter("hi != lo")
@@ -1340,6 +1345,77 @@ def test_star_contraction_skewed_components(spark):
 
     cc = {r["doc_id"]: r["cluster_id"] for r in D.connected_components(pairs).collect()}
     assert cc == truth
+
+
+def test_connected_components_and_survivors_contracted(spark, monkeypatch):
+    """The same pins on the distributed path (every graph is contracted)."""
+    monkeypatch.setattr(D, "_LOCAL_FINISH_EDGES", 0)
+    test_connected_components_and_survivors(spark)
+
+
+def test_star_contraction_skewed_components_contracted(spark, monkeypatch):
+    """connected_components labels the same graph on the distributed path
+    (the star_contraction round bound does not depend on the path)."""
+    monkeypatch.setattr(D, "_LOCAL_FINISH_EDGES", 0)
+    pairs, truth = _skewed_graph(spark)
+    cc = {r["doc_id"]: r["cluster_id"] for r in D.connected_components(pairs).collect()}
+    assert cc == truth
+
+
+@pytest.mark.parametrize(
+    "id_type, to_id",
+    [("bigint", lambda i: i), ("int", lambda i: i), ("string", str)],
+    ids=["bigint", "int", "string"],
+)
+def test_connected_components_driver_finish_matches_contraction(
+    spark, monkeypatch, id_type, to_id
+):
+    """The driver finish and the forced contraction return an identical
+    schema and identical rows: duplicate and reversed pairs, a self-pair
+    (its node labels itself), null ids (they name no document) and an
+    empty input. String ids order as strings ("10" < "9")."""
+    from etl_data_spark import caching
+
+    raw = [
+        (1, 3), (3, 1), (3, 2), (3, 2), (5, 5), (7, 6), (6, 7),
+        (9, 10), (10, 11), (None, 4), (None, None), (12, None), (12, 13),
+    ]
+    rows = [tuple(None if x is None else to_id(x) for x in r) for r in raw]
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for r in rows:
+        ends = [x for x in r if x is not None]
+        if not ends:
+            continue
+        ra, rb = find(ends[0]), find(ends[-1])
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    truth = sorted((x, find(x)) for x in parent)
+
+    schema = f"id_a {id_type}, id_b {id_type}"
+    for data, want in ((rows, truth), ([], [])):
+        pairs = spark.createDataFrame(data, schema)
+        on_driver = D.connected_components(pairs)
+        with monkeypatch.context() as m:
+            m.setattr(D, "_LOCAL_FINISH_EDGES", -1)  # even 0 rows contract
+            contracted = D.connected_components(pairs)
+        for df, local in ((on_driver, True), (contracted, False)):
+            plan = df._jdf.queryExecution().logical().toString()
+            assert ("LocalRelation" in plan) == local, plan
+        assert on_driver.schema == contracted.schema
+        assert on_driver.schema.simpleString() == (
+            f"struct<doc_id:{id_type},cluster_id:{id_type}>"
+        )
+        got = sorted(map(tuple, on_driver.collect()))
+        assert got == sorted(map(tuple, contracted.collect())) == want
+    caching.release_all()
+    assert caching.pinned_count() == 0
 
 
 def test_kmeans_refine_improves_objective(spark):

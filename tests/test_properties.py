@@ -287,6 +287,15 @@ def test_star_contraction_matches_union_find(spark, edges):
     assert got == truth
 
 
+def test_star_contraction_matches_union_find_contracted(spark, monkeypatch):
+    """The same property on the distributed path (every graph is
+    contracted, none finished on the driver)."""
+    from etl_data_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+    test_star_contraction_matches_union_find(spark)
+
+
 # --- PNG codec: decode(filtered-encode(img)) == img for ANY image/filter ----
 
 

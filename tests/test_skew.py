@@ -144,3 +144,12 @@ def test_star_contraction_hub_graph_no_window(spark):
     ))
     plan = rnd._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_star_contraction_hub_graph_no_window_contracted(spark, monkeypatch):
+    """The hub graphs on the distributed path (contracted, not finished
+    on the driver)."""
+    from etl_data_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+    test_star_contraction_hub_graph_no_window(spark)
